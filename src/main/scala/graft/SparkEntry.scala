@@ -711,8 +711,8 @@ object SparkEntry {
     // every exec row's M5 bucket has a ctx bar and the as-of parent IS the
     // bucket bar — an equi-join Catalyst plans as a broadcast hash join with
     // no global-sort window (the round-1 plan was a single-partition
-    // WindowExec). backward()/broadcastRange() remain the general paths for
-    // unaligned ctx (CandleOpsSpec proves all three agree).
+    // WindowExec). backward() remains the general path for unaligned ctx
+    // (CandleOpsSpec proves the two agree).
     "q04_asof_mtf" -> ((s, dir) => {
       // NOT cached despite feeding both the exec side and the M5 resample:
       // measured like q19, the block-manager materialize+read of the

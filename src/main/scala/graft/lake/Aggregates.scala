@@ -46,10 +46,7 @@ object Aggregates {
     // market in the merge key, like LakeWriter.upsert (r14) — see its note
     UpsertCore.mergeWrite(spark, path, enforced,
       LakeLayout.partitionCols,
-      Seq("source", "market", "symbol", "timeframe", "ts"), "ts",
-      // year/month = f(ts), rest ∈ key — exchange fusion applies (see
-      // mergeWrite's partColsDeterminedByKey note)
-      partColsDeterminedByKey = true)
+      Seq("source", "market", "symbol", "timeframe", "ts"), "ts")
   }
 
   /** Incremental materialized-view maintenance: after an upsert touches a

@@ -286,10 +286,7 @@ object LakeWriter {
     // duplicate to keep-last over.
     UpsertCore.mergeWrite(spark, LakeLayout.dataRoot(root), enforced,
       LakeLayout.partitionCols,
-      Seq("source", "market", "symbol", "timeframe", "ts"), "ts",
-      // year/month = f(ts), every other partition column ∈ key — the
-      // exchange-fusion precondition (see mergeWrite)
-      partColsDeterminedByKey = true)
+      Seq("source", "market", "symbol", "timeframe", "ts"), "ts")
   }
 }
 
@@ -451,6 +448,11 @@ private[lake] object UpsertCore {
     * `df.sample(seed)` under a changed upstream layout — remain the
     * caller's contract.
     *
+    * REQUIREMENT (caller's contract): rows sharing a `key` land in ONE
+    * partition cell — the dedupe groups by `key` within each cell, so two
+    * rows with equal keys in different cells both survive. Every engine
+    * caller holds it (see the exchange-fusion note in the body).
+    *
     * `snapshotBudget` bounds the conflict-detection listing (r16): every
     * touched cell is snapshotted and re-checked — FULL detection — up to
     * this many cells; past it, detection degrades to the first
@@ -460,8 +462,7 @@ private[lake] object UpsertCore {
                  partCols: Seq[String], key: Seq[String], sortCol: String,
                  beforePublish: () => Unit = () => (),
                  maxTouched: Int = MaxTouchedPartitions,
-                 snapshotBudget: Int = SnapshotBudgetCells,
-                 partColsDeterminedByKey: Boolean = false): Unit = {
+                 snapshotBudget: Int = SnapshotBudgetCells): Unit = {
     // Tree-existence gate FIRST (one getFileStatus, no listing): a brand-new
     // tree has nothing to conflict with or merge against, so the probe —
     // which costs one evaluation of the batch lineage — is skipped
@@ -479,6 +480,11 @@ private[lake] object UpsertCore {
     //    full scan THE materialization and the publish a checkpoint read —
     //    one evaluation total, at the cost of buffering one BATCH (ingest-
     //    grain, never tree-sized) in local block storage.
+    //    Failure mode: localCheckpoint blocks are not replicated and the pin
+    //    cuts the lineage, so on a cluster losing an executor mid-upsert
+    //    FAILS the write instead of recomputing the (deterministic)
+    //    lineage. Nothing is published on failure; re-running the
+    //    idempotent upsert is the recovery.
     //    Bootstrap writes (no probe) stay un-pinned: single consumer.
     val batchPinned =
       if (hasNonDeterministicExpr(batch)) {
@@ -597,25 +603,23 @@ private[lake] object UpsertCore {
     // land a different survivor — violating O8 idempotence. Well-formed
     // batches have unique keys and never reach the tiebreak.
     val valueCols = merged.columns.filterNot(c => key.contains(c) || c == "_prec")
-    // Exchange fusion (r16, guide §2.4 "two operations keyed the same way
-    // can share one exchange"): when the caller asserts every partition
-    // column is functionally determined by the dedupe key (data/aggregates
-    // trees: year/month = f(ts), every other partCol ∈ key), repartition
-    // by partCols FIRST and extend the window's partitionBy with the
-    // partCols. The dedupe groups are identical (the extra columns are
-    // constant within a key group), HashPartitioning(partCols) satisfies
-    // the window's ClusteredDistribution (partCols ⊆ window keys), and the
-    // publish plan carries ONE data-sized exchange instead of two
-    // (window-key shuffle + layout repartition) — at 100 TB that is one
-    // full network pass of existing ∪ batch saved per upsert. Levels keeps
-    // the two-exchange form: its `market` partCol is NOT determined by its
-    // (session_date, symbol) key, so fusing would split dedupe groups.
-    val (preparted, windowKeys) =
-      if (partColsDeterminedByKey)
-        (merged.repartition(partCols.map(col): _*),
-          (key ++ partCols.filterNot(key.contains)).map(col))
-      else (merged, key.map(col))
-    val w = Window.partitionBy(windowKeys: _*)
+    // Exchange fusion (guide §2.4 "two operations keyed the same way can
+    // share one exchange"): repartition by partCols FIRST and extend the
+    // window's partitionBy with the partCols. HashPartitioning(partCols)
+    // satisfies the window's ClusteredDistribution (partCols ⊆ window
+    // keys), so the publish plan carries ONE data-sized exchange instead of
+    // two (window-key shuffle + layout repartition) — at 100 TB one full
+    // network pass of existing ∪ batch saved per upsert.
+    // Exact because no key group of the merge spans two cells: every merge
+    // reads only the batch's touched cells (the literal, semi-join and race
+    // probes above all confine `existing` to them), and within those cells
+    // each caller's partition columns are constant per key — the data and
+    // aggregates trees have year/month = f(ts) and every other partCol in
+    // the key; LevelsWriter stamps one literal `market` per call and
+    // year = f(session_date). So the extra window keys never split a
+    // dedupe group.
+    val preparted = merged.repartition(partCols.map(col): _*)
+    val w = Window.partitionBy((key ++ partCols.filterNot(key.contains)).map(col): _*)
       .orderBy(col("_prec").desc, struct(valueCols.map(col): _*).desc)
     // Break the lineage BEFORE the overwrite: the batch's lineage may read
     // the very files the dynamic overwrite replaces (e.g. repair flows that
@@ -655,13 +659,10 @@ private[lake] object UpsertCore {
             "single-writer-per-cell contract violated; re-run the upsert")
     }
     spark.sparkContext.setJobDescription(s"mergeWrite:publish $path")
-    // fused mode already hash-clustered by partCols before the window (and
-    // the window preserves its child's partitioning), so each cell is
-    // wholly inside one task — a second repartition would be a pure extra
-    // shuffle of the same bytes
-    val laidOut = if (partColsDeterminedByKey) deduped
-      else deduped.repartition(partCols.map(col): _*)
-    try laidOut
+    // already hash-clustered by partCols before the window (and the window
+    // preserves its child's partitioning), so each cell is wholly inside
+    // one task — a second repartition would be a pure extra shuffle
+    try deduped
       .sortWithinPartitions(col(sortCol)) // ordered within files (reference O6)
       .write.mode("overwrite")
       .partitionBy(partCols: _*)

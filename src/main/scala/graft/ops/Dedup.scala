@@ -76,11 +76,11 @@ object Dedup {
   /** Corpus size where the same-length PassJoin overtakes the blocked
     * all-pairs join in [[fuzzyPairs]]' default-length-blocking mode ON
     * HIGH-ENTROPY corpora — the measured same-phase A/B crossover
-    * (PLANS.md round 15, `Scratch fuzzy-ab entropy`: blocked/segmented
-    * 0.29/0.36 s at 2k rows, 0.69/0.34 at 4k, 37.9/0.53 at 32k — blocked
-    * is block-quadratic, segmented flat). Routing ALSO requires the
-    * [[segmentEntropyOk]] degeneracy probe: on shared-prefix corpora
-    * (`fuzzy-ab supplier`) the constant segments make PassJoin candidates
+    * (PLANS.md round 15, "fuzzyPairs routing A/B", high-entropy corpus:
+    * blocked/segmented 0.29/0.36 s at 2k rows, 0.69/0.34 at 4k, 37.9/0.53
+    * at 32k — blocked is block-quadratic, segmented flat). Routing ALSO
+    * requires the [[segmentEntropyOk]] degeneracy probe: on shared-prefix
+    * corpora (the supplier shape) the constant segments make PassJoin candidates
     * corpus-quadratic ×15 multiplicity and it NEVER wins (measured ~9×
     * slower at every size) — there the blocked join remains optimal and
     * the quadratic cost is the corpus's true pairwise similarity, which
@@ -869,7 +869,7 @@ object Dedup {
     * its quadratic term bites past ~10⁴ docs (q27 exp 1.43 over
     * sf1→sf3). Extending MIH to 32 bits was measured and REJECTED —
     * real-text signatures concentrate per 16-bit half too, and MIH ran
-    * ~3× SLOWER at every size (`Scratch simhash-ab <dir> 32`:
+    * ~3× SLOWER at every size (PLANS.md round 15, "sf3 spot-gate":
     * 0.95/3.02 s at 5k, 30.9/86.2 at 25k). The scale remedy is signature
     * WIDTH, not a different 32-bit blocking: pass `bits = 48` (the q133
     * face — same contract, exp 0.69 over the same triple decade).

@@ -59,19 +59,27 @@ object Graph {
     // data-sized edge table the caller should hand in a persisted/bucketed
     // one (see scaladoc), and this checkpoint is then the caller's single
     // materialization, not a per-round one.
-    // integral weights ONLY (r14): the long cast would TRUNCATE fractional
-    // weights — a source whose weights all truncate to 0 gets a 0 out-sum,
-    // NULL transition probabilities, and its rank mass silently destroyed
-    // every round (breaking the ranks-sum-to-1 invariant). Weights must
-    // also be positive; scale fractional weights to integers upstream.
+    // positive integral weights ONLY: the long cast would TRUNCATE
+    // fractional weights, and a source whose out-weight sums to 0 has no
+    // transition probability — its rank mass would be destroyed every round
+    // (breaking the ranks-sum-to-1 invariant). The type is checked here;
+    // positivity on whichever path runs, with the same message.
+    def badWeights(got: String) =
+      s"pagerank needs a positive INTEGRAL weight column; got $got — scale " +
+        "fractional weights to integers upstream; zero and negative weights " +
+        "have no transition probability"
     require({
       import org.apache.spark.sql.types._
       Set[DataType](ByteType, ShortType, IntegerType, LongType)
         .contains(edges.schema(weightCol).dataType)
-    }, s"pagerank needs a positive INTEGRAL weight column; got " +
-      s"${edges.schema(weightCol).dataType.simpleString} — a fractional " +
-      "weight would truncate (scale to integers upstream)")
-    val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"),
+    }, badWeights(edges.schema(weightCol).dataType.simpleString))
+    // ids take the node type the src ∪ dst union widens them to, so both
+    // paths see the same id values (the local fold builds rows against that
+    // type; an int src beside a long dst would reach it as Integer)
+    val nodeType = edges.select(col(srcCol).as("_n"))
+      .union(edges.select(col(dstCol).as("_n"))).schema("_n").dataType
+    val e = edges.select(col(srcCol).cast(nodeType).as("_src"),
+      col(dstCol).cast(nodeType).as("_dst"),
       col(weightCol).cast("long").as("_w")).localCheckpoint()
     // SIZE-GATED DRIVER-LOCAL FOLD (r17, guide §1.2): each power-iteration
     // round is driver-SYNCHRONOUS — a dangling-mass aggregate, a
@@ -91,12 +99,14 @@ object Graph {
       val head = e.take(maxLocalEdges + 1)
       if (head.length <= maxLocalEdges &&
           head.forall(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))) {
+        require(head.forall(_.getLong(2) > 0), badWeights("a non-positive weight"))
         val nodeField = e.select(col("_src").as("node"))
           .union(e.select(col("_dst"))).schema("node")
         return pagerankLocal(edges.sparkSession, head, nodeField,
           iters, damping, outScale)
       }
     }
+    require(e.where(col("_w") <= 0).isEmpty, badWeights("a non-positive weight"))
     // nodes / outW / trans are loop INVARIANTS — checkpoint them once
     // (r16, guide §1.2): each is consumed every round (dangling anti-join,
     // contribution join, rank restore), and un-pinned they re-ran their

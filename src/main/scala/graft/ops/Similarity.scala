@@ -3,15 +3,15 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions.{cosineNative, dotNative, normNative}
+import graft.functions.VectorFunctions.{dotNative, normNative}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Baseline: exact brute-force cosine top-k (one pass over the corpus per
-  * query — the correct answer, O(n·d)). Scale path: random-hyperplane LSH
-  * bucketing — embeddings are assigned sign-bit bucket keys; queries probe
-  * only their own bucket, turning the scan into an equi-join that shuffles
-  * on bucket keys. Recall < 1 by construction; multi-probe widens recall.
+  * Baseline: exact all-pairs cosine ([[topKJoin]], [[nearDupPairs]] with
+  * `exact = true`) — the correct answer, O(n·m·d). Scale paths: IVF / PQ /
+  * IVF-PQ ANN for top-k, and banded random-hyperplane LSH for
+  * high-threshold near-dup pairs — candidate generation becomes an
+  * equi-join on cell or bucket keys. Recall < 1 by construction.
   *
   * Dot products use [[graft.functions.DotProduct]], a custom Catalyst
   * expression with whole-stage codegen (a tight primitive loop), because
@@ -60,24 +60,9 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Exact top-k neighbors of ONE query vector (given as a literal array),
-    * brute force. For a batch of queries prefer [[topKJoin]].
-    */
-  def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
-                     query: Seq[Double], k: Int): DataFrame = {
-    val q = array(query.map(lit): _*)
-    corpus
-      // zero-norm guard (see pairCosine): NULL, not NaN-ranked-first
-      .withColumn("cosine", round(when(normNative(col(vecCol)) > 0,
-        cosineNative(col(vecCol), q)), 6))
-      .select(col(idCol), col("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
   /** Exact top-k per query row via join + window rank. `queries` and
     * `corpus` both carry (id, vec). The cross join is the exact-answer
-    * cost; use [[lshTopK]] when approximate is acceptable.
+    * cost; use [[ivfTopK]] when approximate is acceptable.
     */
   def topKJoin(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
                k: Int): DataFrame = {
@@ -105,7 +90,7 @@ object Similarity {
     * already far away). Exact form of the standard ANN-based miner.
     *
     * Same declared-exact all-pairs contract as [[topKJoin]] (and the same
-    * scale twin: run the candidate generation through [[ivfTopK]]/[[lshTopK]]
+    * scale twin: run the candidate generation through [[ivfTopK]]
     * and post-filter labels when the corpus is too big for brute force).
     * The label-mismatch predicate rides INSIDE the pair join, so same-label
     * pairs are discarded before the top-k window; per-row norms are
@@ -149,37 +134,16 @@ object Similarity {
       (0 until dim).map(j => graft.functions.VectorKernels.planeValue(seed, p, dim, j))
     }
 
-  /** Random-hyperplane LSH bucket key: sign bits of dot(v, plane_p). */
+  /** Random-hyperplane LSH bucket key: sign bits of dot(v, plane_p) — the
+    * column-composition reference the BandedLshKeys kernel is pinned to
+    * bit for bit (SimilaritySpec).
+    */
   def lshKey(vec: Column, planes: Seq[Seq[Double]]): Column = {
     val bits = planes.zipWithIndex.map { case (plane, p) =>
       val pl = array(plane.map(lit): _*)
       when(dotNative(vec, pl) > 0, lit(1L << p)).otherwise(lit(0L))
     }
     bits.reduce(_ + _)
-  }
-
-  /** Approximate top-k: bucket corpus and queries by LSH key, rank within
-    * the shared bucket only. Equi-join on the bucket key — scales as a
-    * shuffle on bucket keys instead of a cross product.
-    */
-  def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
-              k: Int, nPlanes: Int = 8, dim: Int = 64): DataFrame = {
-    val planes = hyperplanes(nPlanes, dim)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-        normNative(col(vecCol)).as("_qn"))
-      .withColumn("bucket", lshKey(col("_qv"), planes))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
-        normNative(col(vecCol)).as("_cn"))
-      .withColumn("bucket", lshKey(col("_cv"), planes))
-    val scored = q.join(c, "bucket")
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", round(pairCosine("_qv", "_qn", "_cv", "_cn"), 6))
-      .where(col("cosine").isNotNull) // dead vectors occupy no ranks
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
   }
 
   /** IVF-style ANN: assign every vector to its nearest of `nCentroids`
@@ -246,7 +210,7 @@ object Similarity {
 
   /** Corpus size where [[nearDupPairs]]' default mode routes HIGH-threshold
     * calls to the banded LSH generator ([[lshNearDupBanded]]) — measured
-    * same-phase A/B (PLANS.md round 15, `Scratch neardup-ab`). Routing
+    * same-phase A/B (PLANS.md round 15, "nearDupPairs routing A/B"). Routing
     * additionally requires threshold >= [[NearDupLshMinThreshold]]:
     * random-hyperplane collision probability is p = 1 - arccos(t)/π, so a
     * LOW threshold collapses per-band recall (at t = 0.35, p^12 ≈ 3·10⁻³ —
@@ -339,27 +303,6 @@ object Similarity {
         }
       } else brute
     }
-  }
-
-  /** LSH-bucketed near-dup pairs (approximate; scale path). Each vector
-    * hashes to exactly ONE bucket, so a pair can meet in at most one
-    * bucket — output is duplicate-free by construction, no distinct needed.
-    */
-  def lshNearDup(corpus: DataFrame, idCol: String, vecCol: String,
-                 threshold: Double, nPlanes: Int = 8, dim: Int = 64): DataFrame = {
-    val planes = hyperplanes(nPlanes, dim)
-    val keyed = corpus.select(col(idCol).as("id"), col(vecCol).as("_v"),
-        normNative(col(vecCol)).as("_n"))
-      .withColumn("bucket", lshKey(col("_v"), planes))
-    val a = keyed.select(col("id").as("id_a"), col("_v").as("_va"),
-      col("_n").as("_na"), col("bucket"))
-    val b = keyed.select(col("id").as("id_b"), col("_v").as("_vb"),
-      col("_n").as("_nb"), col("bucket"))
-    a.join(b, "bucket")
-      .where(col("id_a") < col("id_b"))
-      .withColumn("cosine", round(pairCosine("_va", "_na", "_vb", "_nb"), 6))
-      .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), col("cosine"))
   }
 
   /** Banded (OR-amplified) LSH near-dup pairs — the measured scale path
@@ -642,17 +585,6 @@ object Similarity {
   private[ops] def fitPq(corpus: DataFrame, idCol: String, vecCol: String,
                     m: Int, codes: Int, dim: Int): PqModel =
     pqFromSeeds(collectPqSeeds(corpus, idCol, vecCol, codes), m, codes, dim)
-
-  /** Dev probes for Scratch pq-debug: encode-only / adc-tables-only. */
-  private[graft] def pqDebugEncode(corpus: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val pq = fitPq(corpus, idCol, vecCol, 4, 16, 64)
-    pq.withCodes(corpus.select(col(idCol), col(vecCol)), vecCol, Seq(col(idCol)))
-  }
-  private[graft] def pqDebugAdc(corpus: DataFrame, queries: DataFrame,
-                                idCol: String, vecCol: String): DataFrame = {
-    val pq = fitPq(corpus, idCol, vecCol, 4, 16, 64)
-    pq.withAdcTables(queries.select(col(idCol), col(vecCol)), vecCol, Seq(col(idCol)))
-  }
 
   def pqTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
              vecCol: String, k: Int, m: Int = 4, codes: Int = 16,

@@ -110,40 +110,6 @@ class CandleOpsSpec extends AnyFunSuite {
     assert(general.sameElements(bucketed))
   }
 
-  test("broadcastRange asof equals backward, including across missing ctx buckets") {
-    // m5 from a gappy m1: several M5 buckets absent -> true as-of fallback
-    val gappy = day.where(!(col("ts") >= lit("2025-08-01 10:00:00") &&
-      col("ts") < lit("2025-08-01 10:30:00")))
-    val m5 = Resample.ohlcv(gappy, Timeframe.M5).select(col("ts"), col("close").as("close_m5"))
-    val exec = day.select(col("ts"), col("close"))
-    val viaWindow = AsofJoin.backward(exec, m5).orderBy("ts").collect()
-    val viaRange = AsofJoin.broadcastRange(exec, m5)
-      .select("ts", "close", "close_m5").orderBy("ts").collect()
-    assert(viaWindow.sameElements(viaRange))
-    // the 10:00-10:30 exec rows must see the 09:55 bar (general fallback,
-    // which the grid bucketJoin would get wrong)
-    val at = viaRange.find(_.getTimestamp(0).toString == "2025-08-01 10:10:00.0").get
-    val m5prev = m5.where(col("ts") === lit("2025-08-01 09:55:00")).head
-    assert(at.getAs[Double]("close_m5") === m5prev.getAs[Double]("close_m5"))
-  }
-
-  test("broadcastRange with partitionCols keeps the left key column and matches backward") {
-    // two symbols with different ctx values: a cross-symbol leak or a dropped
-    // key column both fail this test
-    val execA = day.select(lit("AAA").as("symbol"), col("ts"), col("close"))
-    val execB = day.select(lit("BBB").as("symbol"), col("ts"), (col("close") * 2).as("close"))
-    val exec = execA.unionByName(execB)
-    val m5 = Resample.ohlcv(day, Timeframe.M5)
-    val ctx = m5.select(lit("AAA").as("symbol"), col("ts"), col("close").as("close_m5"))
-      .unionByName(m5.select(lit("BBB").as("symbol"), col("ts"), (col("close") * 2).as("close_m5")))
-    val viaRange = AsofJoin.broadcastRange(exec, ctx, partitionCols = Seq("symbol"))
-    assert(viaRange.columns.count(_ == "symbol") === 1, viaRange.columns.toSeq)
-    val got = viaRange.select("symbol", "ts", "close", "close_m5").orderBy("symbol", "ts").collect()
-    val want = AsofJoin.backward(exec, ctx, partitionCols = Seq("symbol"))
-      .select("symbol", "ts", "close", "close_m5").orderBy("symbol", "ts").collect()
-    assert(got.sameElements(want))
-  }
-
   test("backward asof with chunking (hot-key split) equals the window form") {
     // m5 from a gappy m1 so chunks see empty ctx stretches; 1h chunks force
     // many carry-ins across chunk boundaries, including the equal-ts tie
@@ -152,15 +118,21 @@ class CandleOpsSpec extends AnyFunSuite {
     val m5 = Resample.ohlcv(gappy, Timeframe.M5).select(col("ts"), col("close").as("close_m5"))
     val exec = day.select(col("ts"), col("close"))
     val want = AsofJoin.backward(exec, m5).orderBy("ts").collect()
-    val got = AsofJoin.backward(exec, m5, chunk = 3600L)
+    val got = AsofJoin.directed(exec, m5, direction = "backward", chunk = 3600L)
       .select("ts", "close", "close_m5").orderBy("ts").collect()
     assert(got.sameElements(want))
+    // exec rows inside the gap see the last bar before it (true as-of
+    // fallback, which the grid bucketJoin would get wrong)
+    val at = want.find(_.getTimestamp(0).toString == "2025-08-01 10:10:00.0").get
+    val m5prev = m5.where(col("ts") === lit("2025-08-01 09:55:00")).head
+    assert(at.getAs[Double]("close_m5") === m5prev.getAs[Double]("close_m5"))
     // keyed variant too
     val execK = exec.withColumn("symbol", lit("AAA"))
     val m5K = m5.withColumn("symbol", lit("AAA"))
     val wantK = AsofJoin.backward(execK, m5K, partitionCols = Seq("symbol"))
       .select("symbol", "ts", "close", "close_m5").orderBy("ts").collect()
-    val gotK = AsofJoin.backward(execK, m5K, partitionCols = Seq("symbol"), chunk = 3600L)
+    val gotK = AsofJoin.directed(execK, m5K, partitionCols = Seq("symbol"),
+        direction = "backward", chunk = 3600L)
       .select("symbol", "ts", "close", "close_m5").orderBy("ts").collect()
     assert(gotK.sameElements(wantK))
   }
@@ -256,7 +228,7 @@ class CandleOpsSpec extends AnyFunSuite {
     }
     assert(theV(AsofJoin.backward(left, right)) === None,
       "window-form backward must serve the matched row's null")
-    assert(theV(AsofJoin.backward(left, right, chunk = 50L)) === None,
+    assert(theV(AsofJoin.directed(left, right, direction = "backward", chunk = 50L)) === None,
       "chunked backward must serve the matched row's null (row crosses chunks)")
     assert(theV(AsofJoin.directed(left, right, tolerance = Some(50L), chunk = 100L)) === None,
       "tolerance must never admit a value from beyond it via fill-through-null")

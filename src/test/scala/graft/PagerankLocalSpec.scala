@@ -76,6 +76,33 @@ class PagerankLocalSpec extends AnyFunSuite {
       dist.orderBy("node").collect().toSeq)
   }
 
+  test("mixed id types (int src, long dst): local fold == distributed, bigint nodes") {
+    val mixed = graph.select(col("src").cast("int").as("src"),
+      col("dst").cast("long").as("dst"), col("w"))
+    val local = Graph.pagerank(mixed, "src", "dst", "w", iters = 4)
+    val dist = Graph.pagerank(mixed, "src", "dst", "w", iters = 4,
+      maxLocalEdges = 0)
+    assert(local.schema("node").dataType ===
+      org.apache.spark.sql.types.LongType)
+    assert(local.schema("node").dataType === dist.schema("node").dataType)
+    assert(local.orderBy("node").collect().toSeq ===
+      dist.orderBy("node").collect().toSeq)
+  }
+
+  test("non-positive weights are rejected on both paths with one message") {
+    // source 100's only edge weighs 0 (out-weight 0: no transition
+    // probability), then -2
+    Seq(0L, -2L).foreach { w =>
+      val bad = graph.unionByName(Seq(("100", "1", w)).toDF("src", "dst", "w"))
+      val local = intercept[IllegalArgumentException](
+        Graph.pagerank(bad, "src", "dst", "w", iters = 3))
+      val dist = intercept[IllegalArgumentException](
+        Graph.pagerank(bad, "src", "dst", "w", iters = 3, maxLocalEdges = 0))
+      assert(local.getMessage === dist.getMessage)
+      assert(local.getMessage.contains("positive INTEGRAL weight"), local.getMessage)
+    }
+  }
+
   test("mass conservation survives the local fold (ranks sum to ~1)") {
     val r = Graph.pagerank(graph, "src", "dst", "w", iters = 10)
       .agg(sum("rank")).collect()(0).getDouble(0)

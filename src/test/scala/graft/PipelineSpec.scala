@@ -417,12 +417,50 @@ class PipelineSpec extends AnyFunSuite {
     assert(graft.lake.LevelsWriter.read(spark, root, "BTC-USD").count() === 2)
     // re-upsert with a modified row: keep-last, no duplicates
     val patched = levels.withColumn("or_high", col("or_high") + 1.0)
-    graft.lake.LevelsWriter.upsert(spark, root, patched)
+    val plans = mergePlans(graft.lake.LevelsWriter.upsert(spark, root, patched))
     val readBack = graft.lake.LevelsWriter.read(spark, root, "BTC-USD")
     assert(readBack.count() === 2)
     val orig = levels.orderBy("session_date").collect().map(_.getAs[Double]("or_high"))
     val got = readBack.orderBy("session_date").collect().map(_.getAs[Double]("or_high"))
     assert(got.toSeq === orig.map(_ + 1.0).toSeq)
+    // the whole read-back is the patched batch, row for row
+    assert(readBack.select(patched.columns.map(col): _*).orderBy("session_date")
+      .collect().toSeq === patched.orderBy("session_date").collect().toSeq)
+    // the merge window and the cell layout share ONE data-sized exchange
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val shuffles = plans.flatMap(p => helper.collect(p) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    })
+    assert(plans.nonEmpty && shuffles.length === 1,
+      s"publish plans carry ${shuffles.length} shuffles:\n${plans.mkString("\n")}")
+  }
+
+  /** Physical plans of mergeWrite's dedupe and publish executions inside
+    * `body`: the SQL executions whose logical plan carries the merge's
+    * `_prec` tag, plus the file write.
+    */
+  private def mergePlans(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def isWrite(qe: QueryExecution) =
+      qe.executedPlan.toString.contains("InsertIntoHadoopFsRelationCommand")
+    spark.listenerManager.register(l)
+    try {
+      body
+      // the listener bus is async: wait for the write's event
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.asScala.exists(isWrite) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(l)
+    assert(seen.asScala.exists(isWrite), "the publish write was not observed")
+    seen.asScala.toSeq
+      .filter(qe => isWrite(qe) || qe.analyzed.toString.contains("_prec"))
+      .map(_.executedPlan)
   }
 
   test("streaming documents: watermarked dedup, annotation, quality filter") {

@@ -103,6 +103,23 @@ class SpecContractSpec extends AnyFunSuite {
       === "3.234568", "decimal addition then round-at-grain is exact")
   }
 
+  test("the only main-code entry points are the six named tools") {
+    // a one-off measurement belongs in a Scratch mode over SparkEntry
+    // queries or in a spec, not in a new main that outlives its experiment
+    val objectDecl = "\\bobject\\s+(\\w+)".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val mains = files.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      "\\bdef main\\s*\\(".r.findAllMatchIn(src).map { m =>
+        // the object a main belongs to is the last one declared before it
+        objectDecl.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1)
+      }
+    }
+    assert(mains.sorted === Seq("Bench", "Cli", "Demo", "ScaleGen", "Scratch", "Verify"))
+  }
+
   test("tf alias and default timeframe resolve through the Timeframe vocabulary") {
     val aliases = spec.get("aliases")
     assert(aliases.get("tf").asText() === "timeframe")

@@ -406,17 +406,6 @@ class TextOpsSpec extends AnyFunSuite {
     assert(dups === Seq((0L, 1L)), "the dead vector must not pass the threshold gate")
   }
 
-  test("LSH near-dup finds identical vectors (same bucket by construction)") {
-    val vecs = (0 until 20).map(i =>
-      (i.toLong, (0 until 8).map(j => if (i % 2 == 0) j.toFloat else -j.toFloat - 1f)))
-      .toDF("vec_id", "embedding")
-    val pairs = Similarity.lshNearDup(vecs, "vec_id", "embedding", 0.999, nPlanes = 4, dim = 8)
-    // all even ids identical to each other, all odd ids identical to each other
-    assert(pairs.count() === 2 * (10 * 9 / 2))
-    // duplicate-free by construction (one bucket per vector) - no distinct
-    assert(pairs.select("id_a", "id_b").distinct().count() === pairs.count())
-  }
-
   test("label centroid stats: identical-vector class coheres at 1, split class below") {
     val vecs = Seq(
       (1L, Seq(1f, 0f, 0f), 0L), (2L, Seq(1f, 0f, 0f), 0L),
